@@ -6,7 +6,7 @@ from the same flat-DOM parse the extractor already does: one map-only pass
 emits (src_url, href, anchor, rel, nofollow) per ``<a href>`` node, and a
 single combinable groupBy turns that into the host→host edge list.
 
-100 TB shape: `extract_links` is mapInPandas over (url, html) — page bytes
+100 TB shape: `extract_links` is mapInArrow over (url, html) — page bytes
 never shuffle; `host_link_graph` shuffles only (src_host, dst_host) int/str
 pairs, map-side combined, so a page with 10⁴ same-host links collapses to
 one row per map task before the exchange.
@@ -14,14 +14,15 @@ one row per map task before the exchange.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
-
-import pandas as pd
+from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BooleanType, StringType, StructField, StructType,
 )
+
+from ..htmlkit import charset
+from ..job.kernel import row_kernel
 
 __all__ = ["links_of", "extract_links", "host_link_graph", "host_rank",
            "LINKS_SCHEMA"]
@@ -61,24 +62,17 @@ def links_of(html: str) -> list[dict]:
     return out
 
 
-def _links_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..htmlkit.charset import sniff_decode
-    for b in batches:
-        out = {f.name: [] for f in LINKS_SCHEMA.fields}
-        for url, payload in zip(b["url"], b["html"]):
-            if payload is None:
-                continue
-            try:
-                html, _enc = sniff_decode(bytes(payload))
-                for ln in links_of(html):
-                    out["src_url"].append(url)
-                    out["href"].append(ln["href"])
-                    out["anchor"].append(ln["anchor"])
-                    out["rel"].append(ln["rel"])
-                    out["nofollow"].append(ln["nofollow"])
-            except Exception:  # noqa: BLE001 — never-fail: linkless page
-                continue
-        yield pd.DataFrame(out)
+def _page_links(html: Optional[bytes]) -> list[dict]:
+    """One page's link rows (src_url passes through the kernel). A null
+    or unparseable page contributes none. ``links_of`` is looked up per
+    call, so a wrapper set on the module attribute sees every page."""
+    if html is None:
+        return []
+    try:
+        text, _enc = charset.sniff_decode(bytes(html))
+        return links_of(text)
+    except Exception:  # noqa: BLE001 — never-fail: linkless page
+        return []
 
 
 def extract_links(pages: DataFrame) -> DataFrame:
@@ -87,8 +81,8 @@ def extract_links(pages: DataFrame) -> DataFrame:
     contributes no link rows rather than failing the job — a missing
     page's outlinks are exactly what a real frontier loses when a fetch
     is corrupt."""
-    return pages.select("url", "html").mapInPandas(
-        _links_batch, LINKS_SCHEMA)
+    return pages.select(F.col("url").alias("src_url"), "html").mapInArrow(
+        row_kernel(_page_links, LINKS_SCHEMA), LINKS_SCHEMA)
 
 
 def _host(col):

@@ -1,6 +1,6 @@
 """Multimodal decode / feature-extract kernels over opaque binary columns.
 
-Spark-side plumbing is real (Arrow-batched ``mapInPandas`` over ``binary``,
+Spark-side plumbing is real (Arrow-batched ``mapInArrow`` over ``binary``,
 stable output schema, map-only plan — no shuffle of payload bytes); the
 codec layer is swappable:
 
@@ -31,14 +31,13 @@ input row, so Spark can pipeline batches without buffering a partition.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType, IntegerType, LongType, StringType, StructField, StructType,
 )
+
+from ..job.kernel import row_kernel
 
 __all__ = ["MEDIA_FEATURES_SCHEMA", "MEDIA_DECODE_SCHEMA",
            "MEDIA_META_SCHEMA", "media_meta_features", "media_metadata",
@@ -1894,6 +1893,8 @@ def wav_metadata(raw: bytes) -> dict:
         pos += 8 + clen + (clen & 1)
     if sr is None or data_len is None:
         raise ValueError("WAV fmt/data chunk missing")
+    if nch == 0 or sr == 0 or bits < 8:  # each would divide by zero below
+        raise ValueError("invalid WAV fmt chunk")
     n_frames = data_len // (nch * (bits // 8))
     return {"format": "wav", "duration_ms": n_frames * 1000.0 / sr,
             "sample_rate": sr, "channels": nch,
@@ -2017,22 +2018,11 @@ def resize_image(payload: bytes, width: int, height: int) -> bytes:
     return encode_gif([[tuple(px) for px in row] for row in out.tolist()])
 
 
-def _features_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for b in batches:
-        ids = b["media_id"].tolist()
-        kinds = b["kind"].tolist()
-        payloads = b["payload"].tolist()
-        widths = b["width"].tolist()
-        heights = b["height"].tolist()
-        rows = {"media_id": ids, "kind": kinds,
-                "n_bytes": [], "header": [], "checksum": [],
-                "width": widths, "height": heights}
-        for p in payloads:
-            raw = bytes(p) if p is not None else b""
-            rows["n_bytes"].append(len(raw))
-            rows["header"].append(raw[:8].decode("utf-8", errors="replace"))
-            rows["checksum"].append(hashlib.md5(raw).hexdigest())
-        yield pd.DataFrame(rows)
+def _byte_features(payload: bytes) -> tuple:
+    raw = bytes(payload) if payload is not None else b""
+    return ({"n_bytes": len(raw),
+             "header": raw[:8].decode("utf-8", errors="replace"),
+             "checksum": hashlib.md5(raw).hexdigest()},)
 
 
 MEDIA_DECODE_SCHEMA = StructType([
@@ -2049,9 +2039,6 @@ MEDIA_DECODE_SCHEMA = StructType([
     StructField("duration_ms", DoubleType()),
 ])
 
-_DECODE_NULLS = ["fmt", "width", "height", "mean_r", "mean_g", "mean_b",
-                 "peak", "rms", "duration_ms"]
-
 
 def _channel_means(img: dict) -> tuple:
     """Per-channel means of a decoded array. Grayscale has ONE channel —
@@ -2065,40 +2052,25 @@ def _channel_means(img: dict) -> tuple:
             float(px[..., 2].mean()))
 
 
-def _decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-    for b in batches:
-        out = {k.name: [] for k in MEDIA_DECODE_SCHEMA.fields}
-        for mid, p in zip(b["media_id"].tolist(), b["payload"].tolist()):
-            raw = bytes(p) if p is not None else b""
-            out["media_id"].append(int(mid))
-            # Error tolerance is the same contract as extract_pages: one
-            # corrupt payload in 10^12 rows must yield a status row, never
-            # a failed job. NotImplementedError (unknown/unsupported
-            # codec) and ValueError (malformed bytes) both degrade.
-            try:
-                if raw[:4] == b"RIFF":
-                    a = decode_wav(raw)
-                    vals = {"fmt": "wav", "width": None, "height": None,
-                            "mean_r": None, "mean_g": None, "mean_b": None,
-                            "peak": a["peak"], "rms": a["rms"],
-                            "duration_ms": a["duration_ms"]}
-                else:
-                    img = _decode_image_array(raw)
-                    fmt = image_dimensions(raw)["format"]
-                    mr, mg, mb = _channel_means(img)
-                    vals = {"fmt": fmt, "width": img["width"],
-                            "height": img["height"],
-                            "mean_r": mr, "mean_g": mg, "mean_b": mb,
-                            "peak": None, "rms": None, "duration_ms": None}
-                out["status"].append("ok")
-                for k in _DECODE_NULLS:
-                    out[k].append(vals[k])
-            except Exception as e:  # noqa: BLE001 — never-fail contract
-                out["status"].append(f"error:{type(e).__name__}")
-                for k in _DECODE_NULLS:
-                    out[k].append(None)
-        yield pd.DataFrame(out)
+def _decode_row(payload: bytes) -> tuple:
+    raw = bytes(payload) if payload is not None else b""
+    # Error tolerance is the same contract as extract_pages: one corrupt
+    # payload in 10^12 rows must yield a status row, never a failed job.
+    # NotImplementedError (unknown/unsupported codec) and ValueError
+    # (malformed bytes) both degrade.
+    try:
+        if raw[:4] == b"RIFF":
+            a = decode_wav(raw)
+            return ({"status": "ok", "fmt": "wav", "peak": a["peak"],
+                     "rms": a["rms"], "duration_ms": a["duration_ms"]},)
+        img = _decode_image_array(raw)
+        fmt = image_dimensions(raw)["format"]
+        mr, mg, mb = _channel_means(img)
+        return ({"status": "ok", "fmt": fmt, "width": img["width"],
+                 "height": img["height"],
+                 "mean_r": mr, "mean_g": mg, "mean_b": mb},)
+    except Exception as e:  # noqa: BLE001 — never-fail contract
+        return ({"status": f"error:{type(e).__name__}"},)
 
 
 def decode_media_features(media: DataFrame) -> DataFrame:
@@ -2113,8 +2085,8 @@ def decode_media_features(media: DataFrame) -> DataFrame:
 
     100 TB shape: identical to the features pass — payload bytes never
     enter an Exchange; the scan is pruned to (media_id, payload)."""
-    return media.select("media_id", "payload").mapInPandas(
-        _decode_batch, MEDIA_DECODE_SCHEMA)
+    return media.select("media_id", "payload").mapInArrow(
+        row_kernel(_decode_row, MEDIA_DECODE_SCHEMA), MEDIA_DECODE_SCHEMA)
 
 
 MEDIA_META_SCHEMA = StructType([
@@ -2129,27 +2101,13 @@ MEDIA_META_SCHEMA = StructType([
     StructField("height", IntegerType()),
 ])
 
-_META_NULLS = ("fmt", "duration_ms", "bitrate_kbps", "sample_rate",
-               "channels", "width", "height")
-
-
-def _meta_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for b in batches:
-        out = {k.name: [] for k in MEDIA_META_SCHEMA.fields}
-        for mid, p in zip(b["media_id"].tolist(), b["payload"].tolist()):
-            raw = bytes(p) if p is not None else b""
-            out["media_id"].append(int(mid))
-            try:
-                m = media_metadata(raw)
-                m["fmt"] = m.pop("format")
-                out["status"].append("ok")
-                for k in _META_NULLS:
-                    out[k].append(m.get(k))
-            except Exception as e:  # noqa: BLE001 — never-fail contract
-                out["status"].append(f"error:{type(e).__name__}")
-                for k in _META_NULLS:
-                    out[k].append(None)
-        yield pd.DataFrame(out)
+def _meta_row(payload: bytes) -> tuple:
+    raw = bytes(payload) if payload is not None else b""
+    try:
+        m = media_metadata(raw)
+        return ({"status": "ok", "fmt": m.pop("format"), **m},)
+    except Exception as e:  # noqa: BLE001 — never-fail contract
+        return ({"status": f"error:{type(e).__name__}"},)
 
 
 def media_meta_features(media: DataFrame) -> DataFrame:
@@ -2162,8 +2120,8 @@ def media_meta_features(media: DataFrame) -> DataFrame:
     (ffmpeg-class). Same never-fail contract and plan shape as
     :func:`decode_media_features`: payload bytes never enter an
     Exchange."""
-    return media.select("media_id", "payload").mapInPandas(
-        _meta_batch, MEDIA_META_SCHEMA)
+    return media.select("media_id", "payload").mapInArrow(
+        row_kernel(_meta_row, MEDIA_META_SCHEMA), MEDIA_META_SCHEMA)
 
 
 THUMBNAIL_SCHEMA = StructType([
@@ -2190,46 +2148,27 @@ def thumbnail_features(media: DataFrame, width: int = 8,
     header or body fails to sniff/decode/re-encode degrade to
     status='error:<type>' — never a dropped image, never a failed job
     (matching decode_media_features' contract for the same payload)."""
-    def batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for b in batches:
-            out = {k.name: [] for k in THUMBNAIL_SCHEMA.fields}
-            for mid, p in zip(b["media_id"].tolist(),
-                              b["payload"].tolist()):
-                raw = bytes(p) if p is not None else b""
-                try:
-                    fmt = image_dimensions(raw)["format"]
-                except (NotImplementedError, ValueError) as e:
-                    if not has_image_magic(raw):
-                        continue  # audio/video/unknown rows: not an image
-                    # Image magic with a corrupt/truncated header: an
-                    # error row, same as a corrupt body downstream.
-                    out["media_id"].append(int(mid))
-                    out["status"].append(f"error:{type(e).__name__}")
-                    for k in THUMBNAIL_SCHEMA.fields:
-                        if k.name not in ("media_id", "status"):
-                            out[k.name].append(None)
-                    continue
-                try:
-                    thumb = resize_image(raw, width, height)
-                    img = _decode_image_array(thumb)
-                    mr, mg, mb = _channel_means(img)
-                    vals = {"fmt": fmt, "width": img["width"],
-                            "height": img["height"],
-                            "mean_r": mr, "mean_g": mg, "mean_b": mb}
-                    status = "ok"
-                except Exception as e:  # noqa: BLE001 — never-fail
-                    vals = {k.name: None for k in THUMBNAIL_SCHEMA.fields
-                            if k.name not in ("media_id", "status")}
-                    status = f"error:{type(e).__name__}"
-                out["media_id"].append(int(mid))
-                out["status"].append(status)
-                for k, v in vals.items():
-                    out[k].append(v)
-            yield pd.DataFrame(out)
+    def thumbnail(payload: bytes) -> tuple:
+        raw = bytes(payload) if payload is not None else b""
+        try:
+            fmt = image_dimensions(raw)["format"]
+        except (NotImplementedError, ValueError) as e:
+            if not has_image_magic(raw):
+                return ()  # audio/video/unknown rows: not an image
+            # Image magic with a corrupt/truncated header: an error row,
+            # same as a corrupt body downstream.
+            return ({"status": f"error:{type(e).__name__}"},)
+        try:
+            img = _decode_image_array(resize_image(raw, width, height))
+            mr, mg, mb = _channel_means(img)
+        except Exception as e:  # noqa: BLE001 — never-fail
+            return ({"status": f"error:{type(e).__name__}"},)
+        return ({"status": "ok", "fmt": fmt, "width": img["width"],
+                 "height": img["height"],
+                 "mean_r": mr, "mean_g": mg, "mean_b": mb},)
 
-    return media.select("media_id", "payload").mapInPandas(
-        batch, THUMBNAIL_SCHEMA)
+    return media.select("media_id", "payload").mapInArrow(
+        row_kernel(thumbnail, THUMBNAIL_SCHEMA), THUMBNAIL_SCHEMA)
 
 
 def extract_media_features(media: DataFrame) -> DataFrame:
@@ -2244,4 +2183,5 @@ def extract_media_features(media: DataFrame) -> DataFrame:
         media["meta.width"].alias("width"),
         media["meta.height"].alias("height"),
     )
-    return pruned.mapInPandas(_features_batch, MEDIA_FEATURES_SCHEMA)
+    return pruned.mapInArrow(row_kernel(_byte_features, MEDIA_FEATURES_SCHEMA),
+                             MEDIA_FEATURES_SCHEMA)

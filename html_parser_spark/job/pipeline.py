@@ -12,6 +12,15 @@ Dataflow::
       → extracted table + metrics side table            [snapshot manifest,
                                                          idempotent resume]
 
+One per-row idiom: every per-row Python kernel in the engine (extraction
+here, the synthetic page generator, outlinks, WARC parsing, the media
+generators and decoders) is ``mapInArrow(row_kernel(fn, SCHEMA))`` from
+``job/kernel.py``. ``fn`` maps one row to output dicts and owns its
+never-fail policy; the helper assembles typed Arrow columns and passes
+shared columns (url, warc_ts, lang here) through without touching Python.
+Only whole-batch kernels stay ``mapInPandas``: the ``functions/vecops``
+numpy blocks and ``warc_blobs_from_pages`` (one blob per batch).
+
 Scale notes: per-row Python objects never escape the UDF; batches are capped
 by ``spark.sql.execution.arrow.maxRecordsPerBatch`` (pages are 0.4–1.8 MB —
 we set 256 rows/batch by default so a batch stays ≲0.5 GB); errors never fail
@@ -23,15 +32,16 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Iterable, Iterator, Optional
-
-import pandas as pd
+from collections import Counter
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, LongType, StringType, StructField,
     StructType, TimestampType,
 )
+
+from .kernel import row_kernel
 
 __all__ = [
     "PAGES_SCHEMA", "EXTRACT_SCHEMA", "synthesize_pages", "extract_pages",
@@ -71,7 +81,8 @@ EXTRACT_SCHEMA = StructType([
 
 def build_session(app: str = "html-parser-spark", cores: Optional[int] = None,
                   shuffle_partitions: Optional[int] = None) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS")
+                         or len(os.sched_getaffinity(0)))
     b = (
         SparkSession.builder.master(f"local[{cores}]").appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores))
@@ -92,20 +103,13 @@ def synthesize_pages(spark: SparkSession, n: int,
                      filler: int = 0) -> DataFrame:
     """Deterministic pages table of n rows, generated inside executors."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def page(id: int) -> tuple:
         from ..sources import synth
-        for b in batches:
-            recs = [synth.page_record(int(i), filler=filler) for i in b["id"]]
-            yield pd.DataFrame({
-                "url": [r["url"] for r in recs],
-                "warc_ts": [r["warc_ts"] for r in recs],
-                "html": [r["html"] for r in recs],
-                "text": [r["text"] for r in recs],
-                "lang": [r["lang"] for r in recs],
-            })
+        return (synth.page_record(id, filler=filler),)
 
     parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(gen, PAGES_SCHEMA)
+    return spark.range(0, n, numPartitions=parts).mapInArrow(
+        row_kernel(page, PAGES_SCHEMA), PAGES_SCHEMA)
 
 
 # -- the extraction operator -------------------------------------------------
@@ -177,66 +181,15 @@ def _extract_one_inner(url: str, html_bytes: Optional[bytes]) -> dict:
     return out
 
 
-def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas-compatible kernel (kept for tests/tools on pandas input)."""
-    cols = [f.name for f in EXTRACT_SCHEMA.fields]
-    for b in batches:
-        rows = []
-        urls = b["url"].tolist()
-        htmls = b["html"].tolist()
-        ts = b["warc_ts"].tolist()
-        langs = b["lang"].tolist() if "lang" in b else [None] * len(urls)
-        for url, h, t, lg in zip(urls, htmls, ts, langs):
-            rec = _extract_one(url, h)
-            rec["url"] = url
-            rec["warc_ts"] = t
-            rec["lang"] = lg
-            rows.append(rec)
-        yield pd.DataFrame(rows, columns=cols)
+def _extract_row(url: str, html: Optional[bytes]) -> tuple:
+    # _extract_one is looked up per call, so a wrapper set on the module
+    # attribute (perfbench/kerneltrace.py) sees every page.
+    return (_extract_one(url, html),)
 
 
-# Output columns the Arrow kernel assembles, beyond the 3 pass-throughs.
-_STR_FIELDS = ("profile", "status", "envelope", "name", "brand")
-_TAIL_STR_FIELDS = ("text", "main_text")
-
-
-def extract_batch_arrow(batches: "Iterator[pa.RecordBatch]"):
-    """mapInArrow kernel — the production path.
-
-    Builds output columns directly as Arrow arrays from Python lists:
-    measured ~2× the mapInPandas variant end-to-end, because pandas
-    object-dtype round-trips (arrow→object Series→arrow) on ~25 KB string
-    columns dominate otherwise. The pass-through columns (url, warc_ts,
-    lang) are never materialized into Python at all except url.
-    """
-    import pyarrow as pa
-
-    for b in batches:
-        urls = b.column("url").to_pylist()
-        htmls = b.column("html").to_pylist()
-        recs = [_extract_one(u, h) for u, h in zip(urls, htmls)]
-        arrays = [
-            pa.array(urls, pa.string()),
-            b.column("warc_ts").cast(pa.timestamp("us")),
-            b.column("lang").cast(pa.string()),
-        ]
-        names = ["url", "warc_ts", "lang"]
-        for f in _STR_FIELDS:
-            arrays.append(pa.array([r[f] for r in recs], pa.string()))
-            names.append(f)
-        for f in ("price", "rating"):
-            arrays.append(pa.array([r[f] for r in recs], pa.float64()))
-            names.append(f)
-        for f in _TAIL_STR_FIELDS:
-            arrays.append(pa.array([r[f] for r in recs], pa.string()))
-            names.append(f)
-        arrays.append(pa.array([r["n_nodes"] for r in recs], pa.int32()))
-        names.append("n_nodes")
-        arrays.append(pa.array([r["error"] for r in recs], pa.string()))
-        names.append("error")
-        arrays.append(pa.array([r["elapsed_us"] for r in recs], pa.int64()))
-        names.append("elapsed_us")
-        yield pa.RecordBatch.from_arrays(arrays, names)
+# The production kernel: url, warc_ts and lang pass through as Arrow
+# columns; the rest of EXTRACT_SCHEMA comes from _extract_one's dict.
+extract_batch_arrow = row_kernel(_extract_row, EXTRACT_SCHEMA)
 
 
 def extract_pages(pages: DataFrame, partitions: Optional[int] = None,
@@ -332,22 +285,24 @@ def write_snapshot(extracted: DataFrame, table_dir: str,
             return snap
     data_dir = os.path.join(table_dir, "data", f"run_id={run_id}")
     extracted.write.mode("overwrite").parquet(data_dir)
-    spark = extracted.sparkSession
-    written = spark.read.parquet(data_dir)
-    lineage = [r.asDict() for r in
-               written.groupBy("profile", "status").count().collect()]
-    n = sum(r["count"] for r in lineage)
-    # Per-PARTITION lineage (north_rule): every parquet part file that
-    # makes up the snapshot, with its row count — the Iceberg-manifest
-    # analog that lets an auditor trace any committed row to the task
-    # partition that wrote it.
-    files = sorted(
-        ({"file": r.f[r.f.index("data/run_id="):] if "data/run_id=" in r.f
-          else r.f,
-          "rows": r["count"]}
-         for r in written.groupBy(
-             F.input_file_name().alias("f")).count().collect()),
-        key=lambda d: d["file"])
+    # One read of the written files gives both lineage views: per
+    # (profile, status), and per parquet part file with its row count —
+    # the Iceberg-manifest analog that lets an auditor trace any committed
+    # row to the task partition that wrote it (north_rule).
+    parts = (extracted.sparkSession.read.parquet(data_dir)
+             .groupBy("profile", "status", F.input_file_name().alias("f"))
+             .count().collect())
+    by_status, by_file = Counter(), Counter()
+    for r in parts:
+        by_status[r["profile"], r["status"]] += r["count"]
+        path = r["f"]
+        if "data/run_id=" in path:
+            path = path[path.index("data/run_id="):]
+        by_file[path] += r["count"]
+    lineage = [{"profile": p, "status": st, "count": c}
+               for (p, st), c in by_status.items()]
+    n = sum(by_status.values())
+    files = [{"file": f, "rows": c} for f, c in sorted(by_file.items())]
     parents = committed_snapshots(table_dir)
     manifest = {
         "snapshot_id": len(parents) + 1,

@@ -16,10 +16,10 @@ output. Two halves, both pure stdlib:
   kernel degrades them to error rows, never a failed job).
 
 Spark integration is the usual shape: payload bytes ride Arrow batches
-through ``mapInPandas`` and never enter an Exchange. At 100 TB the blob
-source becomes ``spark.read.format("binaryFile")`` over the crawl bucket
-(or a custom datasource that seeks gzip members); the parse kernel is
-unchanged.
+(``mapInArrow`` per blob on read, ``mapInPandas`` per batch on write) and
+never enter an Exchange. At 100 TB the blob source becomes
+``spark.read.format("binaryFile")`` over the crawl bucket (or a custom
+datasource that seeks gzip members); the parse kernel is unchanged.
 
 Reference scope note: the reference engine starts at saved HTML files
 (its S3-S5 live-fetch is out of scope per the north rule); WARC ingest is
@@ -36,10 +36,12 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     BinaryType, IntegerType, LongType, StringType, StructField, StructType,
 )
+
+from ..job.kernel import row_kernel
 
 __all__ = ["write_warc_record", "write_warc", "iter_warc_records",
            "pages_from_warc_blobs", "warc_blobs_from_pages",
@@ -138,6 +140,8 @@ def iter_warc_records(raw: bytes) -> Iterator[dict]:
                 clen = int(headers["content-length"])
             except (KeyError, ValueError):
                 raise ValueError("WARC record missing Content-Length")
+            if clen < 0:  # would walk pos backwards: an endless loop
+                raise ValueError(f"negative WARC Content-Length {clen}")
             content = chunk[hdr_end + 4:hdr_end + 4 + clen]
             if len(content) < clen:
                 raise ValueError("truncated WARC record content")
@@ -200,29 +204,27 @@ def warc_blobs_from_pages(pages: DataFrame) -> DataFrame:
     return pages.select("url", "html").mapInPandas(fn, _BLOB_SCHEMA)
 
 
+def _blob_pages(warc: bytes) -> list[dict]:
+    """One blob's page rows. A malformed blob keeps the records read
+    before the fault, then adds one error row (url='', http_status=-1,
+    html null)."""
+    rows = []
+    try:
+        for rec in iter_warc_records(bytes(warc)):
+            rec["html"] = rec.pop("body")
+            rows.append(rec)
+    except ValueError:
+        rows.append({"url": "", "warc_date": "", "http_status": -1,
+                     "content_type": ""})
+    return rows
+
+
 def pages_from_warc_blobs(blobs: DataFrame,
                           blob_col: str = "warc") -> DataFrame:
     """WARC blobs → page rows (url, warc_date, http_status, content_type,
     html). Map-only Arrow-batched parse; a malformed blob yields one
-    error row (url='', http_status=-1) rather than failing the job —
-    same never-fail contract as the extract kernel."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {f.name: [] for f in WARC_PAGES_SCHEMA.fields}
-            for blob in b[blob_col]:
-                try:
-                    for rec in iter_warc_records(bytes(blob)):
-                        out["url"].append(rec["url"])
-                        out["warc_date"].append(rec["warc_date"])
-                        out["http_status"].append(rec["http_status"])
-                        out["content_type"].append(rec["content_type"])
-                        out["html"].append(rec["body"])
-                except ValueError:
-                    out["url"].append("")
-                    out["warc_date"].append("")
-                    out["http_status"].append(-1)
-                    out["content_type"].append("")
-                    out["html"].append(None)
-            yield pd.DataFrame(out)
-
-    return blobs.select(blob_col).mapInPandas(fn, WARC_PAGES_SCHEMA)
+    error row (url='', http_status=-1) after any records read before the
+    fault, rather than failing the job — same never-fail contract as the
+    extract kernel."""
+    return blobs.select(F.col(blob_col).alias("warc")).mapInArrow(
+        row_kernel(_blob_pages, WARC_PAGES_SCHEMA), WARC_PAGES_SCHEMA)

@@ -347,3 +347,30 @@ def test_mp3_trailing_false_sync_keeps_good_frames():
     # but a file that STARTS with those still errors
     with pytest.raises(NotImplementedError):
         M.mp3_metadata(bytes((0xFF, 0xE2)) + bytes(30))
+
+
+def _wav_with(offset: int, fmt: str, value: int) -> bytes:
+    """A valid mono 16-bit WAV with one fmt-chunk field overwritten."""
+    import struct
+    raw = bytearray(mediaops.encode_wav([5] * 16, sample_rate=16000))
+    struct.pack_into(fmt, raw, offset, value)
+    return bytes(raw)
+
+
+# fmt chunk fields: channels at byte 22, sample rate at 24, bits at 34.
+BAD_WAV_FMT = [_wav_with(22, "<H", 0),    # channels = 0
+               _wav_with(24, "<I", 0),    # sample_rate = 0
+               _wav_with(34, "<H", 4)]    # bits < 8
+
+
+def test_wav_metadata_invalid_fmt_is_valueerror(spark):
+    """Fields that would divide by zero raise ValueError (not
+    ZeroDivisionError) and land as typed error rows in the meta pass."""
+    for raw in BAD_WAV_FMT:
+        with pytest.raises(ValueError, match="invalid WAV fmt chunk"):
+            mediaops.wav_metadata(raw)
+    df = spark.createDataFrame(list(enumerate(BAD_WAV_FMT)),
+                               "media_id long, payload binary")
+    got = mediaops.media_meta_features(df).collect()
+    assert sorted(r.media_id for r in got) == [0, 1, 2]
+    assert {r.status for r in got} == {"error:ValueError"}

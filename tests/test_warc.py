@@ -4,6 +4,9 @@ blob kernel, and byte-identical html through the full extraction path."""
 
 from __future__ import annotations
 
+import signal
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -106,3 +109,38 @@ def test_bitrot_gzip_degrades_to_error_row(spark):
                                "blob_id long, warc binary")
     rows = W.pages_from_warc_blobs(df).collect()
     assert any(r.http_status == -1 for r in rows)  # job did not fail
+
+
+@contextmanager
+def _wall_clock(seconds: float):
+    """Fail the call with TimeoutError after ``seconds`` instead of
+    letting a parser loop hang the test run."""
+    def expire(_signum, _frame):
+        raise TimeoutError(f"call exceeded {seconds} s")
+    previous = signal.signal(signal.SIGALRM, expire)
+    signal.setitimer(signal.ITIMER_REAL, seconds)
+    try:
+        yield
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, previous)
+
+
+NEGATIVE_CLEN = b"WARC/1.0\r\nContent-Length: -33\r\n\r\n"
+
+
+def test_negative_content_length_raises_not_hangs():
+    with _wall_clock(5), pytest.raises(ValueError, match="Content-Length"):
+        list(W.iter_warc_records(NEGATIVE_CLEN))
+
+
+def test_negative_content_length_blob_gives_error_row(spark):
+    """The records before the bad one are kept, then the error row."""
+    good = W.write_warc(RECS[:1], gzip_members=False)
+    df = spark.createDataFrame([(0, good + NEGATIVE_CLEN)],
+                               "blob_id long, warc binary")
+    with _wall_clock(120):
+        rows = W.pages_from_warc_blobs(df).collect()
+    assert [(r.url, r.http_status) for r in rows] == [(RECS[0][0], 200),
+                                                       ("", -1)]
+    assert rows[1].html is None

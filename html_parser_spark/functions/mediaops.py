@@ -1893,7 +1893,8 @@ def wav_metadata(raw: bytes) -> dict:
         pos += 8 + clen + (clen & 1)
     if sr is None or data_len is None:
         raise ValueError("WAV fmt/data chunk missing")
-    if nch == 0 or sr == 0 or bits < 8:  # each would divide by zero below
+    # zeros would divide by zero below; sample_rate is an int32 column
+    if nch == 0 or not 0 < sr < 2 ** 31 or bits < 8:
         raise ValueError("invalid WAV fmt chunk")
     n_frames = data_len // (nch * (bits // 8))
     return {"format": "wav", "duration_ms": n_frames * 1000.0 / sr,

@@ -12,8 +12,12 @@
   are ignored.
 - A schema field that is also an input column, and that ``fn`` returned
   for no row of the batch, passes through: the input Arrow column is
-  ``take``-n on the source-row indices and never enters Python.
-- Arrow types come from the Spark schema, converted once.
+  ``take``-n on the source-row indices and never enters Python. So ``fn``
+  must return such a key for every row or for none; otherwise the rows
+  without it are null.
+- Arrow types come from the Spark schema, converted once. Conversion is
+  checked: a value that does not fit its column (an int above int32)
+  raises, so ``fn`` range-checks what it parses from outside input.
 
 Columns are built straight from Python lists into Arrow: the extraction
 kernel measured ~2× faster this way than through ``mapInPandas``, whose

@@ -156,6 +156,8 @@ def iter_warc_records(raw: bytes) -> Iterator[dict]:
                 status = int(http_lines[0].split()[1])
             except (IndexError, ValueError):
                 raise ValueError("malformed HTTP status line in WARC")
+            if not 100 <= status <= 999:  # http_status is int32
+                raise ValueError(f"HTTP status {status} out of range")
             ctype = ""
             for line in http_lines[1:]:
                 k, _, v = line.partition(b":")

@@ -358,19 +358,21 @@ def _wav_with(offset: int, fmt: str, value: int) -> bytes:
 
 
 # fmt chunk fields: channels at byte 22, sample rate at 24, bits at 34.
-BAD_WAV_FMT = [_wav_with(22, "<H", 0),    # channels = 0
-               _wav_with(24, "<I", 0),    # sample_rate = 0
-               _wav_with(34, "<H", 4)]    # bits < 8
+BAD_WAV_FMT = [_wav_with(22, "<H", 0),           # channels = 0
+               _wav_with(24, "<I", 0),           # sample_rate = 0
+               _wav_with(34, "<H", 4),           # bits < 8
+               _wav_with(24, "<I", 2 ** 32 - 1)]  # sample_rate > int32
 
 
 def test_wav_metadata_invalid_fmt_is_valueerror(spark):
-    """Fields that would divide by zero raise ValueError (not
-    ZeroDivisionError) and land as typed error rows in the meta pass."""
+    """Fields that would divide by zero or overflow the int32
+    sample_rate column raise ValueError and land as typed error rows in
+    the meta pass, never a failed job."""
     for raw in BAD_WAV_FMT:
         with pytest.raises(ValueError, match="invalid WAV fmt chunk"):
             mediaops.wav_metadata(raw)
     df = spark.createDataFrame(list(enumerate(BAD_WAV_FMT)),
                                "media_id long, payload binary")
     got = mediaops.media_meta_features(df).collect()
-    assert sorted(r.media_id for r in got) == [0, 1, 2]
+    assert sorted(r.media_id for r in got) == list(range(len(BAD_WAV_FMT)))
     assert {r.status for r in got} == {"error:ValueError"}

@@ -58,6 +58,12 @@ def test_malformed_raises_valueerror():
     gz = W.write_warc_record(*RECS[0])
     with pytest.raises(ValueError):
         list(W.iter_warc_records(gz[: len(gz) // 2]))
+    # statuses that do not fit http_status's int32 column, or are no
+    # HTTP status at all
+    for status in (99999999999, -5, 0):
+        rec = W.write_warc_record(*RECS[0], status=status, gzip_member=False)
+        with pytest.raises(ValueError, match="HTTP status"):
+            list(W.iter_warc_records(rec))
 
 
 def test_blob_kernel_never_fails(spark):
@@ -134,10 +140,15 @@ def test_negative_content_length_raises_not_hangs():
         list(W.iter_warc_records(NEGATIVE_CLEN))
 
 
-def test_negative_content_length_blob_gives_error_row(spark):
-    """The records before the bad one are kept, then the error row."""
+@pytest.mark.parametrize("bad", [
+    NEGATIVE_CLEN,
+    W.write_warc_record(*RECS[1], status=99999999999, gzip_member=False),
+], ids=["negative_content_length", "int32_overflow_status"])
+def test_bad_record_blob_gives_error_row(spark, bad):
+    """The records before the bad one are kept, then the error row —
+    never a hang or a failed job."""
     good = W.write_warc(RECS[:1], gzip_members=False)
-    df = spark.createDataFrame([(0, good + NEGATIVE_CLEN)],
+    df = spark.createDataFrame([(0, good + bad)],
                                "blob_id long, warc binary")
     with _wall_clock(120):
         rows = W.pages_from_warc_blobs(df).collect()

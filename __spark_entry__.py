@@ -1025,7 +1025,7 @@ for _kind, _pat, _repl in pii.PII_PATTERNS:
 
 
 def _lsh_bucket_expr(vec: str, n_bits: int = 8) -> str:
-    """DuckDB twin of vecops.lsh_bucket: hyperplane j (1-based) weights
+    """DuckDB twin of vecops._assign_buckets: hyperplane j (1-based) weights
     component i (0-based) by cos(i*j + j); bit set iff projection >= 0."""
     terms = []
     for j in range(1, n_bits + 1):

@@ -42,10 +42,9 @@ def collect_scripts(dom: FlatDOM) -> list[tuple[str, dict]]:
     """All <script> (text, attrs) in document order — gathered once per doc.
 
     Script ids are recorded by the tokenizer (``dom.script_ids``), so this
-    never scans the node array or forces the lazy children index. A script
-    element's rawtext payload, when present, is always the single TEXT node
-    appended immediately after it (tokenize's rawtext branch), so the text
-    lookup is O(1) per script."""
+    never scans the node array. A script element's rawtext payload, when
+    present, is always the single TEXT node appended immediately after it
+    (tokenize's rawtext branch), so the text lookup is O(1) per script."""
     out: list[tuple[str, dict]] = []
     tags = dom.tags
     texts = dom.texts

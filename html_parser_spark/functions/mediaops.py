@@ -1,31 +1,32 @@
 """Multimodal decode / feature-extract kernels over opaque binary columns.
 
-Spark-side plumbing is real (Arrow-batched ``mapInArrow`` over ``binary``,
-stable output schema, map-only plan — no shuffle of payload bytes); the
-codec layer is swappable:
+Every pass is map-only ``mapInArrow`` over the ``binary`` payload column
+with a stable output schema (no shuffle of payload bytes):
 
-- ``_decode_real``: PIL / soundfile / ffmpeg path — **stubbed**: those libs
-  are not in this container, so it raises ``NotImplementedError`` with a
-  clear marker. At 100 TB this is where a vectorized decoder goes; nothing
-  else changes. Real, dependency-free branches exist so the sandbox can
-  test actual codecs: uncompressed 24-bit BMP (``_decode_bmp``), 8-bit
-  truecolor PNG with all five scanline filters (``_decode_png``, stdlib
-  zlib), baseline sequential AND progressive JPEG (``_decode_jpeg``:
-  Huffman + dequant + IDCT + chroma upsample; progressive SOF2 via
-  spectral-selection / successive-approximation scan accumulation, with
-  ``encode_jpeg`` / ``encode_jpeg_progressive`` as the test inverses),
-  GIF87a/89a (``_decode_gif``: LZW + palettes + interlace, with
-  ``encode_gif`` as the inverse), bilinear/nearest ``resize_image`` over
-  any of the four, PCM WAV audio (``decode_wav``, stdlib wave), and
-  header-only dimension sniffing for BMP/PNG/GIF/JPEG
-  (``image_dimensions``). Only video frame sampling and compressed audio
-  remain stubbed (ffmpeg-class work).
-- ``_decode_fake``: deterministic byte-level features (length, header,
-  checksum) — exercised by tests and by the driver's DuckDB oracle, since
-  the fake payloads are md5-hex bytes reproducible in SQL.
+- ``extract_media_features``: byte-level, codec-free features (length,
+  header, checksum), reproducible in the DuckDB oracle
+  (``__spark_entry__.oracle_sql``).
+- ``decode_media_features``: real, dependency-free codecs — uncompressed
+  24-bit BMP (``_decode_bmp``), 8-bit truecolor PNG with all five
+  scanline filters (``_decode_png``, stdlib zlib), baseline sequential AND
+  progressive JPEG (``_decode_jpeg``: Huffman + dequant + IDCT + chroma
+  upsample; progressive SOF2 via spectral-selection / successive-
+  approximation scan accumulation), GIF87a/89a (``_decode_gif``: LZW +
+  palettes + interlace) and PCM WAV audio (``decode_wav``, stdlib wave).
+  ``encode_*`` are the test inverses.
+- ``thumbnail_features``: decode → bilinear/nearest ``resize_image`` →
+  re-encode → decode, over any of the four image codecs.
+- ``media_meta_features``: header-only MP3 / MP4 / WAV metadata.
+  ``image_dimensions`` is the image twin (header-only BMP/PNG/GIF/JPEG
+  format and dims), used by the decode and thumbnail passes.
 
-Batch-shape note: payloads ride Arrow binary arrays; one output row per
-input row, so Spark can pipeline batches without buffering a partition.
+Only video frame sampling (``sample_video_frames``) and compressed audio
+decode stay stubbed: they need ffmpeg-class libraries this package does
+not ship.
+
+Batch-shape note: payloads ride Arrow binary arrays; at most one output
+row per input row, so Spark can pipeline batches without buffering a
+partition.
 """
 
 from __future__ import annotations
@@ -62,15 +63,13 @@ MEDIA_FEATURES_SCHEMA = StructType([
 
 
 def decode_image(payload: bytes) -> dict:
-    """Image decode. One REAL branch the sandbox can test — uncompressed
-    24-bit BMP, decoded in pure Python (fixed public format: BITMAPFILE-
-    HEADER + BITMAPINFOHEADER, little-endian, BGR rows bottom-up with
-    4-byte padding) — all other formats stay stubbed: PIL/libjpeg are not
-    in this container; swap in ``PIL.Image.open(BytesIO(payload))`` on a
-    cluster image that ships codecs.
+    """Image decode in pure Python: BMP, PNG, baseline/progressive JPEG
+    and GIF are all real (see ``_decode_image_array``); any other magic
+    raises ``NotImplementedError``.
 
-    Returns {"width", "height", "mode": "RGB", "pixels"} with pixels as a
-    top-down list of rows of (r, g, b) tuples.
+    Returns {"width", "height", "mode", "pixels"} with pixels as a
+    top-down list of rows of (r, g, b) tuples, or of ints for mode "L"
+    (grayscale JPEG).
     """
     d = _decode_image_array(payload)
     arr = d.pop("array")

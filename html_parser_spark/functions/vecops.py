@@ -10,8 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-__all__ = ["dot", "l2_norm", "cosine", "dot_unrolled", "l2_norm_unrolled",
-           "brute_force_topk", "lsh_bucket", "ivf_topk", "kmeans_cells",
+__all__ = ["dot", "l2_norm", "brute_force_topk", "ivf_topk", "kmeans_cells",
            "near_dup_pairs", "lsh_bucketed_topk"]
 
 
@@ -26,27 +25,6 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(
         a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
     ))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def dot_unrolled(a: Column, b: Column, d: int) -> Column:
-    """Fixed-dimension dot as an unrolled sum of ``element_at`` products.
-
-    Higher-order functions (zip_with/aggregate) are interpreted per element
-    — measured ~370 µs per 64-dim pair on the all-pairs join — while this
-    unrolled form stays inside WholeStageCodegen. Left-associative sum, so
-    the doubles match a sequential fold."""
-    expr = F.element_at(a, 1) * F.element_at(b, 1)
-    for i in range(2, d + 1):
-        expr = expr + F.element_at(a, i) * F.element_at(b, i)
-    return expr
-
-
-def l2_norm_unrolled(a: Column, d: int) -> Column:
-    return F.sqrt(dot_unrolled(a, a, d))
 
 
 def _safe_cos6(qn: str = "q_norm", cn: str = "c_norm") -> Column:
@@ -197,12 +175,11 @@ def near_dup_pairs(corpus: DataFrame, threshold: float = 0.9,
 def _assign_buckets(df: DataFrame, n_bits: int, id_col: str, vec_col: str,
                     out_id: str, out_vec: str, out_norm: str,
                     probes: int = 1) -> DataFrame:
-    """Map-only Arrow-batched LSH bucket + norm assignment — the vectorized
-    twin of :func:`lsh_bucket` (VERDICT r3 task 3: the per-bit interpreted
-    HOF fold was the engine's one remaining interpreted-expression hot
-    path, ~8 sequential aggregate/zip_with folds per row).
+    """Map-only Arrow-batched sign-random-projection LSH bucket + norm
+    assignment (hyperplane j weights component i by cos(i*j + j), fixed and
+    seedless; bit j set iff the projection is >= 0).
 
-    Bit-for-bit parity with the HOF form and the DuckDB twin
+    Bit-for-bit parity with the DuckDB twin
     (``__spark_entry__._lsh_bucket_expr``) is load-bearing: a projection
     near 0 flips its sign bit under any re-association. So the projection
     and the norm accumulate SEQUENTIALLY across dimensions (vectorized
@@ -226,13 +203,12 @@ def _assign_buckets(df: DataFrame, n_bits: int, id_col: str, vec_col: str,
         for pdf in batches:
             if pdf.empty:
                 continue
-            # Null / ragged vectors get a NULL bucket in the HOF form and
-            # silently miss the bucket join; here they must be dropped
-            # BEFORE np.stack or one bad row fails the whole task. The
-            # expected dim is the MODAL size across the batch (ties → the
-            # smaller size, deterministically) — never the first valid
-            # vector, which would let one leading ragged row silently
-            # drop every well-formed row in its batch.
+            # Null / ragged vectors have no bucket and miss the bucket
+            # join; they must be dropped BEFORE np.stack or one bad row
+            # fails the whole task. The expected dim is the MODAL size
+            # across the batch (ties → the smaller size, deterministically)
+            # — never the first valid vector, which would let one leading
+            # ragged row silently drop every well-formed row in its batch.
             vecs = [np.asarray(v, dtype=np.float64)
                     for v in pdf[vec_col]]
             sizes: dict[int, int] = {}
@@ -250,13 +226,13 @@ def _assign_buckets(df: DataFrame, n_bits: int, id_col: str, vec_col: str,
             V = np.stack([vecs[i] for i in keep])
             n_rows, dim = V.shape
             # Hyperplane weights H[j, i] = cos(i*(j+1) + (j+1)) — same
-            # deterministic seedless family as lsh_bucket / the SQL twin.
+            # deterministic seedless family as the SQL twin.
             j1 = np.arange(1, n_bits + 1, dtype=np.float64)
             H = np.cos(np.arange(dim, dtype=np.float64)[None, :]
                        * j1[:, None] + j1[:, None])
             proj = np.zeros((n_rows, n_bits))
             nrm = np.zeros(n_rows)
-            for i in range(dim):  # sequential across dims == the HOF fold
+            for i in range(dim):  # sequential across dims == a left fold
                 proj += V[:, i:i + 1] * H[:, i][None, :]
                 nrm += V[:, i] * V[:, i]
             bucket = ((proj >= 0)
@@ -323,8 +299,8 @@ def lsh_bucketed_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
     parallelism and lets AQE split residual hot buckets).
 
     Buckets and norms come from the Arrow-batched :func:`_assign_buckets`
-    pass (map-only); :func:`lsh_bucket` remains the HOF reference form
-    whose SQL rendering is the DuckDB twin."""
+    pass (map-only); ``__spark_entry__._lsh_bucket_expr`` is its DuckDB
+    twin."""
     q = _assign_buckets(queries, n_bits, id_col, vec_col,
                         "query_id", "q_vec", "q_norm", probes=n_probes)
     c = _assign_buckets(corpus, n_bits, id_col, vec_col,
@@ -521,27 +497,3 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
 
     return _topk_by_cosine(c.join(F.broadcast(q), "cell"), k)
 
-
-def lsh_bucket(vec: Column, n_bits: int = 8) -> Column:
-    """Sign-random-projection LSH bucket id (deterministic hyperplanes:
-    hyperplane j weights component i by cos(i*j+j) — fixed, seedless).
-    Same-bucket vectors are near-duplicate candidates; the bucket key makes
-    ANN a shuffle-on-bucket join instead of a cross product.
-
-    Stays a per-bit sequential HOF fold ON PURPOSE: the DuckDB twin
-    (list_sum over the same element order) must reproduce the projection
-    doubles bit-for-bit, and a groupBy-SUM reformulation would add in
-    shuffle-dependent order, flipping sign bits on projections near 0."""
-    idx = F.transform(vec, lambda x, i: i)
-    bits = []
-    for j in range(n_bits):
-        proj = F.aggregate(
-            F.zip_with(vec, idx,
-                       lambda x, i: x.cast("double") * F.cos(i * F.lit(float(j + 1)) + F.lit(float(j + 1)))),
-            F.lit(0.0), lambda acc, v: acc + v,
-        )
-        bits.append(F.when(proj >= 0, F.lit(1 << j)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out

@@ -4,9 +4,10 @@ This replaces the reference's ``BeautifulSoup(html, "html.parser")`` full-tree
 parse (see /root/reference/1.samsclub/parse_samsclub.py:207,
 costco/parse_costco.py:37, bestbuy/parse_bestbuy_detai.py:17-18) with a
 single-pass tokenizer whose output is a **flattened DOM node array** —
-parallel arrays (tag id, parent, depth, text, attrs) instead of per-node
-Python objects — so downstream selector matching and boilerplate scoring run
-as vectorized kernels over numpy arrays inside Arrow/pandas UDF batches.
+parallel lists (tag, parent, depth, attrs, text) in document order instead
+of per-node Python objects. Each subtree is a contiguous span of those
+lists (see :class:`FlatDOM`), so selectors, text and rules reach a subtree
+by an index range, never by a tree walk.
 
 Design notes (scale):
   * The hot loop is one compiled master regex (``_TOKEN_RE``) driven by
@@ -24,8 +25,6 @@ from __future__ import annotations
 import re
 from html import unescape
 from typing import Optional
-
-import numpy as np
 
 __all__ = ["FlatDOM", "tokenize", "TEXT", "COMMENT"]
 
@@ -63,7 +62,7 @@ _SIBLING_CLOSERS = {
 }
 
 # Union of tags that can trigger ANY implied close — checked inline in the
-# hot loop so _implied_closes is only called when it could matter.
+# hot loop so the close rules are only consulted when they could matter.
 _IMPLIED_TRIGGERS = _P_CLOSERS | frozenset(_SIBLING_CLOSERS)
 
 _TOKEN_RE = re.compile(
@@ -92,12 +91,16 @@ class FlatDOM:
     """Flattened DOM: parallel arrays over nodes in document order.
 
     Node 0 is a synthetic root. Element nodes carry ``attrs`` dicts; text
-    and comment nodes carry ``texts`` payloads. Numpy views (``parent_arr``,
-    ``depth_arr``) back the vectorized selector / boilerplate kernels.
+    and comment nodes carry ``texts`` payloads.
+
+    Span layout: ``tokenize`` appends each subtree before any later
+    sibling, so the subtree of node ``i`` is the contiguous index range
+    ``i+1 .. end(i)``. Every subtree accessor below is a scan over that
+    range; no per-document child index is built.
     """
 
     __slots__ = ("tags", "parent", "depth", "attrs", "texts", "script_ids",
-                 "_parent_arr", "_depth_arr", "_children", "_tag_index")
+                 "_tag_index")
 
     def __init__(self) -> None:
         self.tags: list[str] = ["#root"]
@@ -108,47 +111,45 @@ class FlatDOM:
         # <script> element ids recorded during tokenization so carrier
         # dispatch (collect_scripts) never re-scans the whole node array.
         self.script_ids: list[int] = []
-        self._parent_arr: Optional[np.ndarray] = None
-        self._depth_arr: Optional[np.ndarray] = None
-        self._children: Optional[list[list[int]]] = None
-        # tag -> element ids (doc order), built lazily on first select();
-        # turns each selector scan from O(nodes) into O(candidates).
+        # tag -> element ids (doc order), built on first tag_ids() call.
         self._tag_index: Optional[dict] = None
 
-    # -- construction ------------------------------------------------------
-    def _add(self, tag: str, parent: int, depth: int,
-             attrs: Optional[dict] = None, text: Optional[str] = None) -> int:
-        self.tags.append(tag)
-        self.parent.append(parent)
-        self.depth.append(depth)
-        self.attrs.append(attrs)
-        self.texts.append(text)
-        return len(self.tags) - 1
-
-    # -- array views -------------------------------------------------------
     def __len__(self) -> int:
         return len(self.tags)
 
-    @property
-    def parent_arr(self) -> np.ndarray:
-        if self._parent_arr is None or len(self._parent_arr) != len(self.parent):
-            self._parent_arr = np.asarray(self.parent, dtype=np.int32)
-        return self._parent_arr
-
-    @property
-    def depth_arr(self) -> np.ndarray:
-        if self._depth_arr is None or len(self._depth_arr) != len(self.depth):
-            self._depth_arr = np.asarray(self.depth, dtype=np.int32)
-        return self._depth_arr
+    def end(self, i: int) -> int:
+        """One past the last node of i's subtree: the first later node no
+        deeper than i."""
+        depth = self.depth
+        d = depth[i]
+        n = len(depth)
+        j = i + 1
+        while j < n and depth[j] > d:
+            j += 1
+        return j
 
     def children(self, i: int) -> list[int]:
-        if self._children is None:
-            ch: list[list[int]] = [[] for _ in range(len(self.tags))]
-            for node, par in enumerate(self.parent):
-                if par >= 0:
-                    ch[par].append(node)
-            self._children = ch
-        return self._children[i]
+        parent = self.parent
+        return [j for j in range(i + 1, self.end(i)) if parent[j] == i]
+
+    def tag_ids(self, tag: str):
+        """Element ids carrying ``tag``, doc order. The whole-document index
+        is built in one pass on first use, so every later tag-anchored
+        select is O(candidates) instead of O(nodes)."""
+        ti = self._tag_index
+        if ti is None:
+            ti = {}
+            tags = self.tags
+            for i in range(1, len(tags)):
+                t = tags[i]
+                if t[0] != "#":
+                    lst = ti.get(t)
+                    if lst is None:
+                        ti[t] = [i]
+                    else:
+                        lst.append(i)
+            self._tag_index = ti
+        return ti.get(tag, ())
 
     # -- convenience accessors (used by rules, not hot loops) --------------
     def attrs_of(self, i: int) -> Optional[dict]:
@@ -167,15 +168,9 @@ class FlatDOM:
 
     def node_text(self, i: int) -> str:
         """Concatenated descendant text of node i (whitespace as-is)."""
-        out: list[str] = []
-        stack = [i]
-        while stack:
-            n = stack.pop()
-            if self.tags[n] == TEXT:
-                out.append(self.texts[n] or "")
-            else:
-                stack.extend(reversed(self.children(n)))
-        return "".join(out)
+        if self.tags[i] == TEXT:
+            return self.texts[i] or ""
+        return "".join(self.descendant_texts(i))
 
     def child_texts(self, i: int) -> list[str]:
         """Direct text-node children of i — lxml's ``node/text()`` list
@@ -190,18 +185,8 @@ class FlatDOM:
                 if self.tags[n] == TEXT]
 
     def iter_descendants(self, i: int):
-        """Yield node ids strictly inside the subtree rooted at i, in doc order."""
-        n = len(self.tags)
-        d = self.depth[i]
-        j = i + 1
-        depth = self.depth
-        parent = self.parent
-        # Document order == array order; subtree ends at first node with
-        # depth <= d whose ancestry leaves i. Since siblings may appear at
-        # equal depth, walk until depth[j] <= d.
-        while j < n and depth[j] > d:
-            yield j
-            j += 1
+        """Node ids strictly inside the subtree rooted at i, in doc order."""
+        return iter(range(i + 1, self.end(i)))
 
 
 def _parse_attrs(raw: str) -> dict:
@@ -280,7 +265,8 @@ def tokenize(html: str) -> FlatDOM:
             open_tag, raw_attrs, selfclose = m.group(6, 7, 8)
             tag = open_tag if open_tag.islower() else open_tag.lower()
             if tag in _IMPLIED_TRIGGERS and len(stack) > 1:
-                # _implied_closes inlined (hot: fires on every p/div/li/…).
+                # HTML5-ish implied end tags: <li><li>, <p><div>, table
+                # cells, … (hot: fires on every p/div/li/…).
                 closers = _SIBLING_CLOSERS.get(tag)
                 if closers:
                     while len(stack) > 1 and stack[-1][1] in closers:
@@ -369,17 +355,3 @@ def _find_ci(haystack: str, needle: str, start: int) -> int:
     # Fallback: case-insensitive scan (rare: '</SCRIPT>' etc.)
     m = re.compile(re.escape(needle), re.IGNORECASE).search(haystack, start)
     return m.start() if m else -1
-
-
-def _implied_closes(stack: list, tag: str) -> None:
-    """HTML5-ish implied end tags: <li><li>, <p><div>, table cells, …"""
-    if not stack or len(stack) == 1:
-        return
-    top = stack[-1][1]
-    closers = _SIBLING_CLOSERS.get(tag)
-    if closers:
-        while len(stack) > 1 and stack[-1][1] in closers:
-            stack.pop()
-        return
-    if tag in _P_CLOSERS and top == "p":
-        stack.pop()

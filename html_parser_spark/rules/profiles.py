@@ -731,15 +731,15 @@ def extract_inline_js_detail(dom: FlatDOM, scripts: list, url: str) -> Optional[
 
 
 def _next_sibling(dom: FlatDOM, node: int, tag: str) -> Optional[int]:
-    """``find_next_sibling(tag)`` (costco/parse_costco.py:165-208)."""
-    sibs = dom.children(dom.parent[node])
-    try:
-        at = sibs.index(node)
-    except ValueError:
-        return None
-    for s in sibs[at + 1:]:
-        if dom.tags[s] == tag:
-            return s
+    """``find_next_sibling(tag)`` (costco/parse_costco.py:165-208): hop
+    sibling spans while the next node still shares node's parent."""
+    parent = dom.parent
+    par = parent[node]
+    j = dom.end(node)
+    while j < len(dom) and parent[j] == par:
+        if dom.tags[j] == tag:
+            return j
+        j = dom.end(j)
     return None
 
 
@@ -768,16 +768,9 @@ def _sibling_ul_items(dom: FlatDOM, marker: str) -> list[str]:
     for p in S.select(dom, "p"):
         if marker not in dom.node_text(p):
             continue
-        parent = dom.parent[p]
-        sibs = dom.children(parent)
-        try:
-            at = sibs.index(p)
-        except ValueError:
-            continue
-        for s in sibs[at + 1:]:
-            if dom.tags[s] == "ul":
-                items.extend(F.parse_ul(dom, s))
-                break
+        ul = _next_sibling(dom, p, "ul")
+        if ul is not None:
+            items.extend(F.parse_ul(dom, ul))
     return items
 
 

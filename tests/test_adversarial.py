@@ -25,9 +25,24 @@ _htmlish = st.text(
     max_size=400,
 )
 
+# Tag soup from the elements that drive implied closes (p, li, tr, td,
+# table), raw text (script, title), voids (br) and stray/unclosed tags —
+# shapes _htmlish almost never forms.
+_SOUP_TAGS = ("p", "div", "li", "tr", "td", "table", "a", "script", "title",
+              "br")
+_tag_soup = st.lists(
+    st.one_of(
+        st.sampled_from(_SOUP_TAGS).map(lambda t: f"<{t}>"),
+        st.sampled_from(_SOUP_TAGS).map(lambda t: f"</{t}>"),
+        st.sampled_from(_SOUP_TAGS).map(lambda t: f"</{t.upper()}>"),
+        st.sampled_from(("x", " y ", "&amp;", "<", "\n", "<!--c-->")),
+    ),
+    max_size=60,
+).map("".join)
+
 
 class TestTokenizerFuzz:
-    @given(_htmlish)
+    @given(st.one_of(_htmlish, _tag_soup))
     @settings(max_examples=300, deadline=None)
     def test_never_raises_and_arrays_consistent(self, s):
         dom = tokenize(s)
@@ -38,6 +53,28 @@ class TestTokenizerFuzz:
         for i in range(1, n):
             assert -1 <= dom.parent[i] < i
             assert dom.depth[i] == dom.depth[dom.parent[i]] + 1
+        # Span invariant, checked against the parent array alone: each
+        # subtree is the contiguous range i+1 .. end(i).
+        kids: dict[int, list[int]] = {i: [] for i in range(n)}
+        desc: dict[int, set[int]] = {i: set() for i in range(n)}
+        for j in range(1, n):
+            kids[dom.parent[j]].append(j)
+            a = dom.parent[j]
+            while a >= 0:
+                desc[a].add(j)
+                a = dom.parent[a]
+        for i in range(n):
+            assert set(range(i + 1, dom.end(i))) == desc[i]
+            assert dom.children(i) == kids[i]
+            out: list[str] = []
+            stack = [i]
+            while stack:
+                k = stack.pop()
+                if dom.tags[k] == TEXT:
+                    out.append(dom.texts[k] or "")
+                else:
+                    stack.extend(reversed(kids[k]))
+            assert dom.node_text(i) == "".join(out)
         # Text extraction and selection never raise either.
         extract_text(dom)
         collect_scripts(dom)

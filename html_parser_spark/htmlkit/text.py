@@ -1,8 +1,8 @@
 """Byte-exact plain-text extraction over a FlatDOM.
 
-The reference strips tags with ``soup.get_text()``
-(/root/reference/1.samsclub/parse_samsclub.py:45-50,
-bedbathbeyond/parse_bedbathbeyond.py:87-89). That function's whitespace
+The reference scripts strip tags with ``soup.get_text()``
+(1.samsclub/parse_samsclub.py:45-50, bedbathbeyond/parse_bedbathbeyond.py:87-89).
+That function's whitespace
 behavior is bs4-defined; since goldens here are produced by our own oracle
 (SURVEY.md §5.2), we pin an explicit spec — **TEXT-SPEC v1** — implemented
 twice: here over flat arrays (engine) and in ``tests/oracle.py`` over stdlib
@@ -13,20 +13,25 @@ TEXT-SPEC v1
 1. Subtrees under ``script style template noscript iframe svg head`` and
    comment nodes contribute no text.
 2. Text nodes accumulate into the current line buffer (entity-decoded).
-3. Opening OR closing a *block* element (``_BLOCK_TAGS``) or ``<br>``
-   terminates the current line: the buffer is concatenated, runs of
-   whitespace collapsed to a single space, stripped; non-empty results are
-   emitted as one line.
+3. Opening OR closing a *block* element (``BLOCK_TAGS``) or ``<br>``
+   outside an excluded subtree terminates the current line: the buffer is
+   concatenated, runs of whitespace collapsed to a single space, stripped;
+   non-empty results are emitted as one line.
 4. Output = lines joined with ``"\\n"``.
+
+The same walk also yields BOILER-SPEC v1's scored lines
+(``extract/boilerplate.py``), which end at every block or ``<br>``
+boundary, including those inside excluded subtrees.
 """
 
 from __future__ import annotations
 
 import re
 
-from .tokenizer import COMMENT, TEXT, FlatDOM
+from .tokenizer import TEXT, FlatDOM
 
-__all__ = ["extract_text", "BLOCK_TAGS", "EXCLUDED_TAGS"]
+__all__ = ["extract_text", "text_and_scored", "BLOCK_TAGS", "EXCLUDED_TAGS",
+           "BOILER_CONTAINERS"]
 
 EXCLUDED_TAGS = frozenset(
     "script style template noscript iframe svg head".split()
@@ -38,78 +43,104 @@ BLOCK_TAGS = frozenset(
     li main menu nav ol optgroup option p pre section select table tbody td
     tfoot th thead tr ul""".split()
 )
-_BLOCK_TAGS = BLOCK_TAGS
+
+BOILER_CONTAINERS = frozenset("nav footer header aside form".split())
+
+# tag -> (is_block, is_excluded, is_a, is_boiler_container); tags absent
+# here never touch the walk's state, so they are not kept on its stack.
+# No excluded tag is a block, so a boundary never opens or closes one.
+_KIND = {t: (t in BLOCK_TAGS, int(t in EXCLUDED_TAGS), int(t == "a"),
+             int(t in BOILER_CONTAINERS))
+         for t in BLOCK_TAGS | EXCLUDED_TAGS | BOILER_CONTAINERS | {"a"}}
 
 _WS_RE = re.compile(r"\s+")
 
 
-def extract_text(dom: FlatDOM) -> str:
-    """TEXT-SPEC v1 extraction over the flat node arrays, one pass."""
-    tags = dom.tags
+def _collapse(line: str) -> str:
+    # Collapse only when a whitespace run can exist: most content lines
+    # carry single spaces only, and the C substring scans are ~free next
+    # to the regex sub.
+    if (not line.isascii() or "  " in line or "\n" in line or "\t" in line
+            or "\r" in line or "\f" in line or "\v" in line):
+        line = _WS_RE.sub(" ", line)
+    return line.strip()
+
+
+def text_and_scored(dom: FlatDOM) -> tuple[str, list[tuple[str, int, int, bool]]]:
+    """One walk → (TEXT-SPEC v1 text, BOILER-SPEC v1 scored lines).
+
+    Every block or ``<br>`` boundary ends a scored line
+    ``(text, n_chars, n_link_chars, in_boiler_container)``. A boundary
+    inside an excluded subtree is *soft*; all others are *hard*. A text
+    line is the collapse of the raw segments between two hard boundaries
+    (whitespace-only ones included), so a run of one segment reuses that
+    segment's collapsed scored line."""
     depth = dom.depth
-    texts = dom.texts
-    n = len(tags)
-
     lines: list[str] = []
-    buf: list[str] = []
-    # Stack of (depth, is_block) for open elements we care about; plus an
-    # exclusion counter driven by the same stack.
-    stack: list[tuple[int, bool, bool]] = []  # (depth, is_block, is_excluded)
-    excluded = 0
+    scored: list[tuple[str, int, int, bool]] = []
+    buf: list[str] = []   # raw pieces of the current scored line
+    run: list[str] = []   # raw segments ended by soft boundaries
+    link = 0
+    boiler = False
+    stack: list[tuple[int, bool, int, int, int]] = []
+    in_a = in_boiler = excluded = 0
 
-    def flush() -> None:
-        if buf:
-            line = "".join(buf)
-            del buf[:]
-            # Fast path: collapse only when a whitespace run can exist —
-            # most content lines carry single spaces only, and the C
-            # substring scans are ~free next to the regex sub.
-            if (not line.isascii() or "  " in line or "\n" in line
-                    or "\t" in line or "\r" in line or "\f" in line
-                    or "\v" in line):
-                line = _WS_RE.sub(" ", line)
-            line = line.strip()
-            if line:
-                lines.append(line)
+    def boundary(hard: bool) -> None:
+        nonlocal link, boiler
+        raw = "".join(buf)
+        buf.clear()
+        line = _collapse(raw)
+        if line:
+            scored.append((line, len(line), min(link, len(line)), boiler))
+        link = 0
+        boiler = False
+        if not hard:
+            run.append(raw)
+            return
+        if run:
+            run.append(raw)
+            line = _collapse("".join(run))
+            run.clear()
+        if line:
+            lines.append(line)
 
-    for i in range(1, n):
-        d = depth[i]
-        # Close any elements whose subtree ended before node i.
+    # A depth-0 sentinel after the last node closes every open element.
+    for d, t, x in zip(depth[1:] + [0], dom.tags[1:] + [""],
+                       dom.texts[1:] + [None]):
         while stack and stack[-1][0] >= d:
-            _, was_block, was_excluded = stack.pop()
-            if was_excluded:
-                excluded -= 1
-            elif was_block and not excluded:
-                # blocks INSIDE an excluded subtree contribute no line
-                # boundary either (TEXT-SPEC rule 1; matches the oracle)
-                flush()
-        tag = tags[i]
-        if tag == TEXT:
+            _, block, excl, a, box = stack.pop()
+            in_a -= a
+            in_boiler -= box
+            excluded -= excl
+            if block and (buf or run):
+                boundary(not excluded)
+        if t == TEXT:
             if not excluded:
-                buf.append(texts[i] or "")
-        elif tag == COMMENT:
-            continue
+                buf.append(x or "")
+                if in_a or in_boiler:
+                    x = _WS_RE.sub(" ", x or "").strip()
+                    if in_a:
+                        link += len(x)
+                    if in_boiler and x:
+                        boiler = True
+        elif t == "br":
+            if buf or run:
+                boundary(not excluded)
         else:
-            is_excl = tag in EXCLUDED_TAGS
-            is_block = tag in _BLOCK_TAGS
-            if tag == "br":
-                if not excluded:
-                    flush()
-                continue  # void: no stack entry
-            if is_excl:
-                excluded += 1
-                stack.append((d, is_block, True))
-            else:
-                if is_block and not excluded:
-                    flush()
-                stack.append((d, is_block, False))
+            k = _KIND.get(t)
+            if k is not None:
+                block, excl, a, box = k
+                if block and (buf or run):
+                    boundary(not excluded)
+                in_a += a
+                in_boiler += box
+                excluded += excl
+                stack.append((d, block, excl, a, box))
+    if buf or run:
+        boundary(True)
+    return "\n".join(lines), scored
 
-    # Drain remaining opens.
-    while stack:
-        _, was_block, was_excluded = stack.pop()
-        if was_excluded:
-            excluded -= 1
-        elif was_block and not excluded:
-            flush()
-    flush()
-    return "\n".join(lines)
+
+def extract_text(dom: FlatDOM) -> str:
+    """TEXT-SPEC v1 extraction over the flat node arrays."""
+    return text_and_scored(dom)[0]

@@ -153,8 +153,8 @@ def _extract_one_inner(url: str, html_bytes: Optional[bytes]) -> dict:
         html, _enc = sniff_decode(bytes(html_bytes))
         dom = tokenize(html)
         out["n_nodes"] = len(dom)
-        # One traversal for both outputs (equivalent to extract_text +
-        # main_text; see boilerplate.text_and_scored).
+        # One line walk gives the TEXT-SPEC text and the BOILER-SPEC
+        # scored lines that main_text selects from (htmlkit/text.py).
         out["text"], scored = boilerplate.text_and_scored(dom)
         out["main_text"] = boilerplate.select_content(scored)
         scripts = collect_scripts(dom)

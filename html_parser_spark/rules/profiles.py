@@ -646,8 +646,7 @@ def extract_inline_js_detail(dom: FlatDOM, scripts: list, url: str) -> Optional[
         after = None
         seen_marker = False
         for child in kids:
-            ctext = (dom.texts[child] if dom.tags[child] == "#text"
-                     else dom.node_text(child)) or ""
+            ctext = dom.node_text(child)
             if seen_marker and dom.tags[child] == "#text" and ctext.strip():
                 after = ctext
                 break
@@ -751,9 +750,7 @@ def _contents_text(dom: FlatDOM, selector: str) -> str:
         return ""
     out = []
     for child in dom.children(root):
-        t = (dom.texts[child] if dom.tags[child] == "#text"
-             else dom.node_text(child)) or ""
-        t = t.strip()
+        t = dom.node_text(child).strip()
         if t:
             out.append(t + "\n")
     return "".join(out)
@@ -1054,16 +1051,21 @@ def extract_escaped_component_detail(dom: FlatDOM, scripts: list,
             energy_star = bool(gj(pnrg, ["energyRatings",
                                          "energyStarCertified"]))
 
-    # shop-specifications script by id-contains (ref :124-136).
+    # shop-specifications script by id-contains (ref :124-136). The ref
+    # indexes this payload directly too; a bad one degrades the row like
+    # a missing component key instead of dropping every bestbuy field.
     specifications: list = []
+    specs_degraded = None
     for text, attrs in scripts:
         if "shop-specifications" in (attrs.get("id") or ""):
-            specs_data = json.loads(text)
-            for cat in specs_data["specifications"]["categories"]:
-                specifications.extend(
+            try:
+                specifications = [
                     {"type": cat["displayName"],
                      "name": it["displayName"], "value": it["value"]}
-                    for it in cat["specifications"])
+                    for cat in json.loads(text)["specifications"]["categories"]
+                    for it in cat["specifications"]]
+            except (ValueError, KeyError, TypeError):
+                specs_degraded = "shop-specifications script unparsable"
             break
 
     # upc: last displayName=="UPC" in the initial_data carve (ref :140-152
@@ -1106,8 +1108,9 @@ def extract_escaped_component_detail(dom: FlatDOM, scripts: list,
         "upc": upc,
     }
     env = _envelope(url, detail)
-    if cd_degraded:
-        env["_degraded"] = cd_degraded
+    if cd_degraded or specs_degraded:
+        env["_degraded"] = "; ".join(filter(None, (cd_degraded,
+                                                   specs_degraded)))
     return env
 
 
@@ -1177,8 +1180,7 @@ def extract_webpack_detail(dom: FlatDOM, scripts: list, url: str) -> Optional[di
     rating = total_ratings = None
     stars_n = S.select_one(dom, "button[data-hb-id=ReviewStars]>p")
     if stars_n is not None:
-        parts = [dom.texts[c] if dom.tags[c] == "#text" else dom.node_text(c)
-                 for c in dom.children(stars_n)]
+        parts = [dom.node_text(c) for c in dom.children(stars_n)]
         try:
             rating = float(parts[0].split()[1])
             total_ratings = int(parts[2].split()[0])
@@ -1521,6 +1523,12 @@ def extract_webpack_serp(dom: FlatDOM, scripts: list, url: str) -> Optional[dict
 
 # -- apijson-reviews (prev/parse_tesco.py) -----------------------------------
 
+def _body_text(dom: FlatDOM) -> str:
+    """Every text node of the page, joined and stripped: the raw body of a
+    site API dump served as the page payload."""
+    return dom.node_text(0).strip()
+
+
 def extract_apijson_reviews(dom: FlatDOM, scripts: list,
                             url: str) -> Optional[dict]:
     """Raw reviews-API JSON body → flat normalized dict, field-for-field
@@ -1530,8 +1538,7 @@ def extract_apijson_reviews(dom: FlatDOM, scripts: list,
     (tests/test_reference_fixtures.py)."""
     if scripts:
         return None
-    raw = "".join(dom.texts[i] or "" for i in range(len(dom))
-                  if dom.tags[i] == "#text").strip()
+    raw = _body_text(dom)
     if not raw.startswith("["):
         return None
     try:
@@ -1578,9 +1585,7 @@ def extract_apijson_serp(dom: FlatDOM, scripts: list, url: str) -> Optional[dict
     """Raw JSON body (S2 source: site API dump used as the page payload)."""
     if scripts:
         return None
-    from ..htmlkit.tokenizer import TEXT
-    raw = "".join(dom.texts[i] or "" for i in range(len(dom))
-                  if dom.tags[i] == TEXT).strip()
+    raw = _body_text(dom)
     if not raw.startswith(("{", "[")):
         return None
     try:

@@ -173,10 +173,12 @@ class TestTextOracleFuzz:
         from html_parser_spark.htmlkit.text import extract_text
         import sys, os
         sys.path.insert(0, os.path.dirname(__file__))
-        from oracle import oracle_text
-        from html_parser_spark.extract.boilerplate import text_and_scored
+        from oracle import oracle_scored, oracle_text
+        from html_parser_spark.extract.boilerplate import (score_lines,
+                                                           text_and_scored)
         dom = tokenize(html)
         t1 = extract_text(dom)
         assert t1 == oracle_text(html)
-        t2, _ = text_and_scored(dom)
+        t2, s = text_and_scored(dom)
         assert t2 == t1
+        assert s == score_lines(dom) == oracle_scored(html)

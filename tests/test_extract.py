@@ -4,11 +4,15 @@ from __future__ import annotations
 
 import json
 
+from hypothesis import given, settings, strategies as st
+
 from html_parser_spark.htmlkit.tokenizer import tokenize
 from html_parser_spark.extract import carriers as C
 from html_parser_spark.extract import fields as F
 from html_parser_spark.extract import boilerplate, pdfkit
 from html_parser_spark.extract.jsonpath import get_from_json, walk_first
+
+from .oracle import oracle_scored, oracle_text
 
 
 class TestJsonPath:
@@ -304,30 +308,70 @@ class TestFragmentParsers:
 
 
 class TestCombinedPass:
-    """text_and_scored must be exactly extract_text + score_lines."""
+    """The one walk's (text, scored) equals its accessors and the
+    independent stdlib oracles."""
+
+    @staticmethod
+    def _check(html):
+        from html_parser_spark.htmlkit.text import extract_text
+        dom = tokenize(html)
+        t, s = boilerplate.text_and_scored(dom)
+        assert t == extract_text(dom), html
+        assert s == boilerplate.score_lines(dom), html
+        assert t == oracle_text(html), html
+        assert s == oracle_scored(html), html
 
     def test_equivalent_on_corpus(self):
         from html_parser_spark.sources import synth
-        from html_parser_spark.htmlkit.text import extract_text
         for idx in range(120):
             raw = synth.render_page(idx, filler=3)
             if raw[:4] == b"%PDF":
                 continue
-            dom = tokenize(raw.decode("utf-8", "replace"))
-            t, s = boilerplate.text_and_scored(dom)
-            assert t == extract_text(dom)
-            assert s == boilerplate.score_lines(dom)
+            self._check(raw.decode("utf-8", "replace"))
 
     def test_equivalent_around_excluded_subtrees(self):
-        from html_parser_spark.htmlkit.text import extract_text
         for html in ("a<noscript><div>x</div></noscript>b",
                      "a<noscript><br></noscript>b",
                      "a<script>x</script>b",
-                     "<div>a<style>p{}</style>b</div>c"):
-            dom = tokenize(html)
-            t, s = boilerplate.text_and_scored(dom)
-            assert t == extract_text(dom), html
-            assert s == boilerplate.score_lines(dom), html
+                     "<div>a<style>p{}</style>b</div>c",
+                     # soft boundaries only: whitespace-only segments
+                     # still join the text line ("a b"), scored "a", "b"
+                     "a<noscript><p></p></noscript> "
+                     "<noscript><p></p></noscript>b"):
+            self._check(html)
+        t, s = boilerplate.text_and_scored(tokenize(
+            "a<noscript><p></p></noscript> <noscript><p></p></noscript>b"))
+        assert t == "a b"
+        assert s == [("a", 1, 0, False), ("b", 1, 0, False)]
+
+
+def _fixpoint_select(lines):
+    """BOILER-SPEC smoothing by its plain definition: repeat until no
+    short linkless non-boiler line next to a kept line is left out."""
+    keep = [not b and c >= boilerplate.MIN_CONTENT_CHARS
+            and lc / max(c, 1) < boilerplate.MAX_LINK_DENSITY
+            for _, c, lc, b in lines]
+    changed = True
+    while changed:
+        changed = False
+        for i, (_, c, lc, b) in enumerate(lines):
+            if keep[i] or b or lc or c < boilerplate.MIN_CONT_CHARS:
+                continue
+            if (i > 0 and keep[i - 1]) or (i + 1 < len(lines) and keep[i + 1]):
+                keep[i] = changed = True
+    return "\n".join(line[0] for line, k in zip(lines, keep) if k)
+
+
+_scored_line = st.builds(
+    lambda i, c, lc, b: (f"L{i}", c, min(lc, c), b),
+    st.integers(0, 99), st.sampled_from([0, 5, 8, 12, 24, 25, 40]),
+    st.sampled_from([0, 0, 0, 1, 5, 20]), st.booleans())
+
+
+@given(st.lists(_scored_line, max_size=30))
+@settings(max_examples=300, deadline=None)
+def test_select_content_matches_fixpoint(lines):
+    assert boilerplate.select_content(lines) == _fixpoint_select(lines)
 
 
 def test_pdf_spec_edge_cases():

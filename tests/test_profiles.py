@@ -64,3 +64,28 @@ def test_bestbuy_missing_component_key_degrades_not_errors():
     assert env["detail"]["name"] == gold["detail"]["name"]
     assert env["detail"]["price"] == gold["detail"]["price"]
     assert env["detail"]["included_items"] == []
+
+
+@pytest.mark.parametrize("payload", ['{"specifications": {"categ',
+                                     '{"specifications": []}',
+                                     '{"specifications": {"categories":'
+                                     ' [{"displayName": "G"}]}}'])
+def test_bestbuy_bad_specs_script_degrades_not_errors(payload):
+    """A broken shop-specifications script (unparsable JSON or the wrong
+    shape) must cost only the specifications field: the row keeps every
+    other bestbuy field and says why in '_degraded'."""
+    import re
+    idx = next(i for i in range(40)
+               if synth.profile_for(i) == "escaped-component-detail")
+    html = synth.render_page(idx).decode("utf-8")
+    mutated, n = re.subn(r'(<script id="shop-specifications"[^>]*>).*?'
+                         r'(</script>)', lambda m: m[1] + payload + m[2],
+                         html, flags=re.S)
+    assert n == 1
+    dom = tokenize(mutated)
+    prof, env = extract_page(dom, collect_scripts(dom), synth.url_for(idx))
+    assert prof == "escaped-component-detail"
+    assert "shop-specifications" in env.pop("_degraded")
+    gold = synth.golden_envelope(idx)
+    assert gold["detail"]["specifications"]
+    assert env == {**gold, "detail": {**gold["detail"], "specifications": []}}
